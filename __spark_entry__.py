@@ -34,7 +34,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: stats + constraints + SR drift over the events table at
-    sf0.001 — scan → project → agg → window → applyInPandas → verdicts."""
+    sf0.001 — scan → project → agg → window → mapInArrow → verdicts."""
     sf_dir = "/root/testdata/sf0.001"
     from anomaly_detector_spark.operators.drift import derive_series, drift_verdicts, score_drift
 

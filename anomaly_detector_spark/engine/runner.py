@@ -1,5 +1,5 @@
 """Validation runner — orchestrates stats + constraints + drift into
-per-partition verdicts, violation rows, and metrics/lineage tables.
+per-partition verdicts and violation rows.
 
 Mirrors the reference's request lifecycle (validate -> detect -> verdict,
 SURVEY.md §3.1) at table scope: every check is a DataFrame op; outputs keep
@@ -8,7 +8,6 @@ stable (conv_id, turn_idx) ordering per the north rule.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -22,7 +21,6 @@ from anomaly_detector_spark.schema import ROLE_DOMAIN, TOOL_DOMAIN
 class ValidationResult:
     verdicts: DataFrame
     violations: DataFrame
-    metrics: dict = field(default_factory=dict)
     _persisted: list = field(default_factory=list, repr=False)
 
     def release(self) -> None:
@@ -106,7 +104,6 @@ def run_validation(spark: SparkSession, transcripts: DataFrame, registry: DataFr
     One-shot callers that consume a single output exactly once (e.g. a
     verdicts-only query) pass False: nothing is pinned, nothing to release.
     """
-    t0 = time.time()
     from pyspark import StorageLevel
 
     if cache_input:
@@ -204,8 +201,8 @@ def run_validation(spark: SparkSession, transcripts: DataFrame, registry: DataFr
     sharded = transcripts.withColumn(
         "shard", F.pmod(F.xxhash64("conv_id"), F.lit(drift_shards))
     )
-    # derive_series pins the series_key hash partitioning that both the
-    # grid-index window and the scoring applyInPandas need — one exchange
+    # derive_series pins the partition_key hash partitioning that both the
+    # grid-index window and the scoring mapInArrow pass need — one exchange
     # serves both stages (score_drift runs with assume_partitioned=True).
     series_parts = spark.sparkContext.defaultParallelism * 4
     series = derive_series(sharded, partition_cols=["shard", "role"], ts_col="ts",
@@ -242,6 +239,5 @@ def run_validation(spark: SparkSession, transcripts: DataFrame, registry: DataFr
     return ValidationResult(
         verdicts=verdicts,
         violations=violations,
-        metrics={"wall_s": time.time() - t0},
         _persisted=persisted,
     )

@@ -1,9 +1,9 @@
 """Distribution-drift checks — the reference's anomaly scoring as Spark ops.
 
 Derives per-partition timeseries from the transcripts/events table with pure
-DataFrame aggregations (one shuffle), then scores each bounded series with
-the numpy kernel pipeline inside Arrow-batched ``applyInPandas`` (SURVEY.md
-§2.14: groupBy(key).applyInPandas, no per-row Python).
+DataFrame aggregations, then scores each bounded series with the numpy kernel
+pipeline in one ``mapInArrow`` pass per hash partition (no per-row Python,
+no pandas conversion on either side of the Python boundary).
 
 Scale notes: a series group is capped at MAX_SERIES_POINTS (the reference's
 own 8640-point validation bound, univariate_anomaly_detection.py:54-55), so
@@ -13,11 +13,15 @@ aggregation before it reduces 10^12 turns to (#partitions x #buckets) rows.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from anomaly_detector_spark.schema import MAX_SERIES_POINTS, MIN_SERIES_POINTS
+
+F32_MAX = 3.4028234663852886e38
+# score_drift's repartition: 4 waves of tasks, fine enough that straggling
+# heavy series don't leave cores idle at the tail of the stage
+SCORE_WAVES = 4
 
 DRIFT_RESULT_SCHEMA = T.StructType(
     [
@@ -57,10 +61,8 @@ def derive_series(df: DataFrame, partition_cols: list[str], ts_col: str = "ts",
     north-star metrics (turn rate, text length, tool usage).
 
     ``num_partitions`` pins the explicit partition_key repartition that feeds
-    the idx window.  The same hash partitioning satisfies the downstream
-    ``groupBy(partition_key, metric).applyInPandas`` clustering requirement
-    (a hash partitioning on a SUBSET of the grouping keys satisfies
-    ClusteredDistribution), so the scoring stage in
+    the idx window.  The same hash partitioning co-locates every
+    (partition_key, metric) series in one partition, so the scoring stage in
     ``score_drift(assume_partitioned=True)`` adds NO second shuffle — one
     exchange covers both the grid-index window and the kernel pass.
 
@@ -131,59 +133,15 @@ def derive_series(df: DataFrame, partition_cols: list[str], ts_col: str = "ts",
     )
 
 
-def _score_group(pdf: pd.DataFrame, granularity: str, threshold: float,
-                 max_anomaly_ratio: float) -> pd.DataFrame:
-    from anomaly_detector_spark.kernels.detect import detect_series
-
-    pdf = pdf.sort_values("idx")
-    if "series_key" in pdf.columns:
-        key = pdf["series_key"].iloc[0]
-    else:
-        # derive_series ships (partition_key, metric) separately; the public
-        # series_key is their concatenation, built once per group here
-        key = f"{pdf['partition_key'].iloc[0]}/{pdf['metric'].iloc[0]}"
-    n = len(pdf)
-    empty = pd.DataFrame(columns=[f.name for f in DRIFT_RESULT_SCHEMA.fields])
-    if n < MIN_SERIES_POINTS or n > MAX_SERIES_POINTS:
-        return empty
-    indices = (pdf["idx"] - pdf["idx"].iloc[0]).tolist()
-    try:
-        results, period, _, model_id, _ = detect_series(
-            pdf["value"].tolist(), indices, granularity=granularity,
-            interval=1, threshold=threshold, max_anomaly_ratio=max_anomaly_ratio,
-        )
-    except Exception:
-        return empty
-    out = pd.DataFrame(
-        {
-            "series_key": key,
-            # filled grid rows are dropped by detect_series, so results rows
-            # are exactly the observed points in ascending idx order
-            "idx": pdf["idx"].to_numpy(),
-            "value": results["value"],
-            "expected_value": results["expected_value"],
-            "is_anomaly": results["is_anomaly"],
-            "is_positive_anomaly": results["is_positive_anomaly"],
-            "is_negative_anomaly": results["is_negative_anomaly"],
-            "score": results.get("score", results["value"] * 0.0),
-            "period": period,
-            "model_id": model_id,
-        }
-    )
-    return out
-
-
 def _score_partition_arrow(batches, granularity: str, threshold: float,
                            max_anomaly_ratio: float):
     """Score every series co-located in one partition from raw Arrow batches.
 
-    The ``mapInArrow`` fast path of :func:`score_drift`: skips the pandas
-    Block-manager conversion on BOTH sides of the Python boundary.  Grouping
-    is done in C++ (``dictionary_encode`` of the joined key) + one numpy
-    ``lexsort``; per-group semantics are IDENTICAL to :func:`_score_group`
-    (same sort by idx, same min/max length gate, same kernel call, same
-    skip-on-exception), asserted by
-    tests/test_drift_planted.py::test_arrow_engine_matches_pandas_engine.
+    Grouping is done in C++ (``dictionary_encode`` of each key column) + one
+    numpy ``lexsort``; each series is sorted by idx, gated on the reference's
+    [MIN_SERIES_POINTS, MAX_SERIES_POINTS] length bounds, and handed to
+    ``detect_series``.  A series outside the bounds, or one the kernel raises
+    on, gets no output rows.
     """
     import numpy as np
     import pyarrow as pa
@@ -194,28 +152,21 @@ def _score_partition_arrow(batches, granularity: str, threshold: float,
     if not batches:
         return
     tbl = pa.Table.from_batches(batches)
-    names = tbl.column_names
-    if "partition_key" in names and "metric" in names:
-        # group on the (partition_key, metric) PAIR, exactly like the pandas
-        # engine's groupBy: encode each column separately and combine the
-        # integer codes.  Joining the strings first would merge distinct
-        # pairs whose concatenations collide (partition values may contain
-        # "/"), silently scoring them as one interleaved series.
-        enc_pk = tbl.column("partition_key").dictionary_encode().combine_chunks()
-        enc_m = tbl.column("metric").dictionary_encode().combine_chunks()
-        m_dict = enc_m.dictionary.to_pylist()
-        pk_dict = enc_pk.dictionary.to_pylist()
-        n_m = max(len(m_dict), 1)
-        codes = (enc_pk.indices.to_numpy(zero_copy_only=False).astype(np.int64) * n_m
-                 + enc_m.indices.to_numpy(zero_copy_only=False))
-        # the public series_key stays the "/" join (same output as the
-        # pandas engine builds per group)
-        keys = {int(c): f"{pk_dict[int(c) // n_m]}/{m_dict[int(c) % n_m]}"
-                for c in np.unique(codes)}
-    else:
-        enc = tbl.column("series_key").dictionary_encode().combine_chunks()
-        codes = enc.indices.to_numpy(zero_copy_only=False)
-        keys = dict(enumerate(enc.dictionary.to_pylist()))
+    # group on the (partition_key, metric) PAIR: encode each column
+    # separately and combine the integer codes.  Joining the strings first
+    # would merge distinct pairs whose concatenations collide (partition
+    # values may contain "/"), silently scoring them as one interleaved
+    # series.
+    enc_pk = tbl.column("partition_key").dictionary_encode().combine_chunks()
+    enc_m = tbl.column("metric").dictionary_encode().combine_chunks()
+    m_dict = enc_m.dictionary.to_pylist()
+    pk_dict = enc_pk.dictionary.to_pylist()
+    n_m = max(len(m_dict), 1)
+    codes = (enc_pk.indices.to_numpy(zero_copy_only=False).astype(np.int64) * n_m
+             + enc_m.indices.to_numpy(zero_copy_only=False))
+    # the public series_key is the "/" join of the pair
+    keys = {int(c): f"{pk_dict[int(c) // n_m]}/{m_dict[int(c) % n_m]}"
+            for c in np.unique(codes)}
     idx = tbl.column("idx").to_numpy(zero_copy_only=False)
     val = tbl.column("value").to_numpy(zero_copy_only=False)
     order = np.lexsort((idx, codes))
@@ -245,7 +196,7 @@ def _score_partition_arrow(batches, granularity: str, threshold: float,
         out["is_anomaly"].append(np.asarray(results["is_anomaly"], dtype=bool))
         out["is_positive_anomaly"].append(np.asarray(results["is_positive_anomaly"], dtype=bool))
         out["is_negative_anomaly"].append(np.asarray(results["is_negative_anomaly"], dtype=bool))
-        # mirror _score_group's `value * 0.0` fallback exactly (NaN-propagating)
+        # detectors that report no score get `value * 0.0` (NaN-propagating)
         score = results.get("score", results["value"] * 0.0)
         out["score"].append(np.asarray(score, dtype=np.float64))
         out["period"].append(np.full(n, period, dtype=np.int32))
@@ -270,96 +221,55 @@ def _score_partition_arrow(batches, granularity: str, threshold: float,
 
 
 def score_drift(series_df: DataFrame, granularity: str = "hourly", threshold: float = 3.5,
-                max_anomaly_ratio: float = 0.25, num_partitions: int | None = None,
-                assume_partitioned: bool = False, engine: str = "arrow",
-                transport_dtype: str = "float32") -> DataFrame:
-    """Per-point drift scores for every series (one Arrow UDF pass).
+                max_anomaly_ratio: float = 0.25, assume_partitioned: bool = False) -> DataFrame:
+    """Per-point drift scores for every (partition_key, metric) series of
+    ``derive_series`` output (one ``mapInArrow`` pass).
 
-    The input is explicitly repartitioned on series_key: the aggregated
-    series table is tiny in bytes but heavy in per-group CPU (the scoring
-    kernel), so AQE's size-based coalescing would otherwise shrink this
-    stage to a handful of tasks and serialize the kernel work.  An explicit
-    user repartition pins the parallelism (AQE honors user-specified
-    partition counts).
+    The input is explicitly repartitioned on (partition_key, metric): the
+    aggregated series table is tiny in bytes but heavy in per-group CPU (the
+    scoring kernel), so AQE's size-based coalescing would otherwise shrink
+    this stage to a handful of tasks and serialize the kernel work.  An
+    explicit user repartition pins the parallelism (AQE honors
+    user-specified partition counts).
 
     ``assume_partitioned=True`` skips that repartition for inputs that are
-    ALREADY hash-partitioned compatibly (e.g. straight out of
-    ``derive_series(num_partitions=...)``, which partitions by
-    partition_key — a subset of the (partition_key, metric) grouping keys)
-    — the existing partitioning satisfies applyInPandas's clustering
-    requirement, so the kernel pass runs shuffle-free.  Only the group key
-    plus (idx, value) is projected into the Arrow transfer; extra input
-    columns never cross to Python.
+    ALREADY hash-partitioned by partition_key (straight out of
+    ``derive_series``), which co-locates every series in one partition, so
+    the kernel pass runs shuffle-free.  Only the key pair plus (idx, value)
+    is projected into the Arrow transfer; extra input columns never cross to
+    Python.
 
-    Accepts either the (partition_key, metric) column pair from
-    derive_series or a legacy single ``series_key`` column.
-
-    ``engine="arrow"`` (default) runs the kernel pass as ``mapInArrow`` over
-    the hash-partitioned series rows — per-partition C++ group encoding,
-    no pandas Block conversion in either direction.  ``engine="pandas"``
-    keeps the original ``groupBy().applyInPandas`` form (used by the A/B
-    equivalence test).  Both engines see identical rows and produce
-    identical output.
-
-    ``transport_dtype="float32"`` halves the value bytes crossing the
-    JVM→Python Arrow channel.  The scoring kernel consumes Python floats
-    (f64) either way, so this quantizes the INPUT values to f32 precision
-    (~1e-7 relative) before detection — the reference's own Cython kernels
-    are float32 internally (kernels/esd.py:15), so thresholds/flags are
-    insensitive at this scale; the golden-corpus and kernel A/B harnesses
-    feed the kernel directly and are unaffected.  Values beyond the f32
-    range clamp to +/-3.4e38 (huge-but-finite) rather than overflowing to
-    Infinity.  Pass "float64" for exact f64 transport.
+    Values cross the JVM->Python Arrow channel as float32, halving the value
+    bytes.  The scoring kernel consumes Python floats (f64), so this
+    quantizes the INPUT values to f32 precision (~1e-7 relative) before
+    detection — the reference's own Cython kernels are float32 internally
+    (kernels/esd.py:15), so thresholds/flags are insensitive at this scale.
+    NULL and NaN points are dropped; values beyond the f32 range, +/-inf
+    included, clamp to +/-3.4e38 (huge-but-finite) rather than overflowing
+    to Infinity.
     """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_group(pdf, granularity, threshold, max_anomaly_ratio)
-
-    if assume_partitioned and num_partitions is not None:
-        raise ValueError(
-            "num_partitions and assume_partitioned are mutually exclusive: "
-            "pass num_partitions to derive_series instead"
-        )
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if transport_dtype not in ("float32", "float64"):
-        raise ValueError(f"unknown transport_dtype {transport_dtype!r}")
-    if "partition_key" in series_df.columns and "metric" in series_df.columns:
-        group_cols = ["partition_key", "metric"]
-    else:
-        group_cols = ["series_key"]
-    filtered = series_df.select(*group_cols, "idx", F.col("value").cast("double").alias("value")).filter(
-        F.col("value").isNotNull() & ~F.isnan("value")
-    )
-    if transport_dtype == "float32":
-        # clamp BEFORE the narrowing cast: Spark's double->float cast sends
-        # |v| > f32-max to +/-Infinity, which would poison the kernel's
-        # statistics.  Clamping keeps such values huge-but-finite, so the
-        # anomaly flags match the f64 transport (a 1e39 spike and a 3.4e38
-        # spike are both colossal outliers).  NaNs were filtered above —
-        # least/greatest would otherwise absorb them (Spark orders NaN
-        # largest).  Genuine +/-inf inputs also clamp to the finite extremes;
-        # callers needing exact inf/f64 semantics pass transport_dtype
-        # ="float64".
-        f32_max = 3.4028234663852886e38
-        clamped = F.least(F.greatest(F.col("value"), F.lit(-f32_max)), F.lit(f32_max))
-        filtered = filtered.withColumn("value", clamped.cast("float"))
+    filtered = series_df.select(
+        "partition_key", "metric", "idx", F.col("value").cast("double").alias("value")
+    ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
+    # clamp BEFORE the narrowing cast: Spark's double->float cast sends
+    # |v| > f32-max to +/-Infinity, which would poison the kernel's
+    # statistics.  Clamping keeps such values huge-but-finite (a 1e39 spike
+    # and a 3.4e38 spike are both colossal outliers).  NaNs were filtered
+    # above — least/greatest would otherwise absorb them (Spark orders NaN
+    # largest).
+    clamped = F.least(F.greatest(F.col("value"), F.lit(-F32_MAX)), F.lit(F32_MAX))
+    filtered = filtered.withColumn("value", clamped.cast("float"))
     if not assume_partitioned:
-        if num_partitions is None:
-            # 4 waves of tasks: fine enough that straggling heavy series
-            # don't leave cores idle at the tail of the stage
-            num_partitions = series_df.sparkSession.sparkContext.defaultParallelism * 4
-        filtered = filtered.repartition(num_partitions, *group_cols)
-    if engine == "arrow":
-        # the repartition above (or derive_series' pinned partitioning under
-        # assume_partitioned) hash-co-locates every group's rows in one
-        # partition, so a per-partition scorer sees whole series
-        def afn(batches):
-            return _score_partition_arrow(batches, granularity, threshold,
-                                          max_anomaly_ratio)
+        num_partitions = series_df.sparkSession.sparkContext.defaultParallelism * SCORE_WAVES
+        filtered = filtered.repartition(num_partitions, "partition_key", "metric")
 
-        return filtered.mapInArrow(afn, DRIFT_RESULT_SCHEMA)
-    return filtered.groupBy(*group_cols).applyInPandas(fn, DRIFT_RESULT_SCHEMA)
+    # the repartition above (or derive_series' pinned partitioning under
+    # assume_partitioned) hash-co-locates every series' rows in one
+    # partition, so a per-partition scorer sees whole series
+    def afn(batches):
+        return _score_partition_arrow(batches, granularity, threshold, max_anomaly_ratio)
+
+    return filtered.mapInArrow(afn, DRIFT_RESULT_SCHEMA)
 
 
 def drift_verdicts(scored: DataFrame, max_anomaly_rate: float = 0.05) -> DataFrame:

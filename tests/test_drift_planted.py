@@ -1,18 +1,28 @@
 """Planted-anomaly truth tests for the Spark-side drift wiring.
 
 The golden corpus proves the numpy kernel; these prove the DataFrame plumbing
-(derive_series bucketing/grid indices -> applyInPandas scoring -> verdict
+(derive_series bucketing/grid indices -> mapInArrow scoring -> verdict
 rollup) flags exactly the planted events and nothing structural around them.
+The scoring pass is checked against a driver-side replay that calls
+``detect_series`` directly on the collected series rows.
 """
 
 import datetime as dt
+import math
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-import pytest
 
-from anomaly_detector_spark.operators.drift import derive_series, drift_verdicts, score_drift
+from anomaly_detector_spark.kernels.detect import detect_series
+from anomaly_detector_spark.operators.drift import (
+    F32_MAX,
+    derive_series,
+    drift_verdicts,
+    score_drift,
+)
+from anomaly_detector_spark.schema import MAX_SERIES_POINTS, MIN_SERIES_POINTS
+from conftest import count_exchanges
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -90,43 +100,103 @@ def test_score_drift_skips_too_short_series(spark):
     assert score_drift(series, granularity="hourly").count() == 0
 
 
-def test_arrow_engine_matches_pandas_engine(spark):
-    """The mapInArrow fast path and the applyInPandas path are the SAME
-    operator: identical rows out (values bitwise, given identical transport
-    dtype) on a battery with spiky, flat, and gappy series."""
-    spikes = {"click": [50, 120], "view": [], "purchase": [33]}
-    ev = _mk_events(spark, spikes, n_hours=150)
-    series = derive_series(ev, partition_cols=["event_type"], ts_col="ts", bucket="1 hour",
-                           value_exprs={"event_rate": F.count(F.lit(1)).cast("double"),
-                                        "value_avg": F.avg("value")})
-    cols = ["series_key", "idx", "value", "expected_value", "is_anomaly",
-            "is_positive_anomaly", "is_negative_anomaly", "score", "period", "model_id"]
-    a = sorted(score_drift(series, granularity="hourly", engine="arrow").collect(),
-               key=lambda r: (r["series_key"], r["idx"]))
-    b = sorted(score_drift(series, granularity="hourly", engine="pandas").collect(),
-               key=lambda r: (r["series_key"], r["idx"]))
-    assert len(a) == len(b) > 0
-    for ra, rb in zip(a, b):
-        for c in cols:
-            va, vb = ra[c], rb[c]
-            if isinstance(va, float):
-                assert va == vb or (np.isnan(va) and np.isnan(vb)), (ra["series_key"], ra["idx"], c)
+def _replay(rows, quantize: bool = True) -> dict:
+    """Driver replay of score_drift on collected (partition_key, metric,
+    idx, value) rows: NULL/NaN points dropped, sorted by idx, quantized to
+    float32 with the +/-f32-max clamp exactly as the transport does (or left
+    exact float64 with ``quantize=False``), then ``detect_series`` called
+    directly.  Returns {(partition_key, metric): [output row tuples]} for
+    every series inside the [MIN_SERIES_POINTS, MAX_SERIES_POINTS] bounds;
+    rows follow the DRIFT_RESULT_SCHEMA column order."""
+    groups: dict = {}
+    for r in rows:
+        v = r["value"]
+        if v is not None and not math.isnan(v):
+            groups.setdefault((r["partition_key"], r["metric"]), []).append((r["idx"], v))
+    out = {}
+    for (pk, metric), pts in groups.items():
+        if not MIN_SERIES_POINTS <= len(pts) <= MAX_SERIES_POINTS:
+            continue
+        pts.sort()
+        idx = [i for i, _ in pts]
+        vals = np.array([v for _, v in pts], dtype=np.float64)
+        if quantize:
+            vals = np.clip(vals, -F32_MAX, F32_MAX).astype(np.float32)
+        results, period, _, model_id, _ = detect_series(
+            vals.tolist(), [i - idx[0] for i in idx], granularity="hourly",
+            interval=1, threshold=3.5, max_anomaly_ratio=0.25)
+        score = results.get("score", results["value"] * 0.0)
+        out[(pk, metric)] = [
+            (f"{pk}/{metric}", i, float(results["value"][j]),
+             float(results["expected_value"][j]), bool(results["is_anomaly"][j]),
+             bool(results["is_positive_anomaly"][j]),
+             bool(results["is_negative_anomaly"][j]), float(score[j]), period, model_id)
+            for j, i in enumerate(idx)
+        ]
+    return out
+
+
+def _assert_rows_equal(got, want):
+    """Row tuples equal field by field; floats exactly (NaN equals NaN)."""
+    assert len(got) == len(want)
+    for rg, rw in zip(got, want):
+        for vg, vw in zip(rg, rw):
+            if isinstance(vw, float):
+                assert vg == vw or (math.isnan(vg) and math.isnan(vw)), (rg, rw)
             else:
-                assert va == vb, (ra["series_key"], ra["idx"], c)
+                assert vg == vw, (rg, rw)
 
 
-def test_transport_dtype_float64_matches_flags(spark):
+def _planted_series(spark, spikes: dict, n_hours: int = 200):
+    return derive_series(_mk_events(spark, spikes, n_hours=n_hours), partition_cols=["event_type"],
+                         ts_col="ts", bucket="1 hour",
+                         value_exprs={"event_rate": F.count(F.lit(1)).cast("double")})
+
+
+def test_score_drift_matches_driver_replay(spark):
+    """Every score_drift row equals the driver replay of detect_series, on a
+    battery with spiky, flat, too-short and too-long series; exactly the
+    series inside the 12..8640-point bounds are scored."""
+    # sec_avg values (e.g. 9.5 / 7) are not float32-exact, so the replay
+    # only matches if the transport quantizes exactly as it claims
+    metrics = {"event_rate": F.count(F.lit(1)).cast("double"), "value_avg": F.avg("value"),
+               "sec_avg": F.avg(F.second("ts") / 7.0)}
+    ev = _mk_events(spark, {"click": [50, 120], "view": [], "purchase": [33]}, n_hours=150)
+    short = _mk_events(spark, {"rare": []}, n_hours=MIN_SERIES_POINTS - 1)
+    series = derive_series(ev.unionByName(short), partition_cols=["event_type"], ts_col="ts",
+                           bucket="1 hour", value_exprs=metrics)
+    too_long = spark.range(MAX_SERIES_POINTS + 1).select(
+        F.lit("long").alias("partition_key"), F.lit("event_rate").alias("metric"),
+        F.col("id").cast("int").alias("idx"), F.lit(1.0).alias("value"))
+    series = series.select("partition_key", "metric", "idx", "value").unionByName(too_long)
+    want = _replay(series.collect())
+    assert sorted(want) == sorted((t, m) for t in ("click", "view", "purchase")
+                                  for m in metrics)
+    got = sorted(tuple(r) for r in score_drift(series, granularity="hourly").collect())
+    _assert_rows_equal(got, sorted(row for rows in want.values() for row in rows))
+
+
+def test_score_drift_adds_no_exchange_after_derive_series(spark):
+    """derive_series' partition_key hash partitioning co-locates every
+    series, so assume_partitioned scoring adds no Exchange of its own; the
+    default path pays exactly one repartition."""
+    series = _planted_series(spark, {"click": [50], "view": []})
+    base = count_exchanges(series)
+    assert count_exchanges(score_drift(series, granularity="hourly",
+                                       assume_partitioned=True)) == base
+    assert count_exchanges(score_drift(series, granularity="hourly")) == base + 1
+
+
+def test_float32_transport_flags_match_float64_kernel(spark):
     """float32 transport quantizes inputs at ~1e-7 relative; detection flags
-    on the planted battery are identical to exact float64 transport."""
-    spikes = {"click": [50, 120], "view": []}
-    ev = _mk_events(spark, spikes)
-    series = derive_series(ev, partition_cols=["event_type"], ts_col="ts", bucket="1 hour",
-                           value_exprs={"event_rate": F.count(F.lit(1)).cast("double")})
-    f32 = {(r["series_key"], r["idx"]): r["is_anomaly"]
-           for r in score_drift(series, granularity="hourly", transport_dtype="float32").collect()}
-    f64 = {(r["series_key"], r["idx"]): r["is_anomaly"]
-           for r in score_drift(series, granularity="hourly", transport_dtype="float64").collect()}
-    assert f32 == f64 and len(f32) > 0
+    on the planted battery equal detect_series on the exact float64 values."""
+    series = _planted_series(spark, {"click": [50, 120], "view": []})
+    exact = _replay(series.collect(), quantize=False)
+    want = {(r[0], r[1]): r[4] for rows in exact.values() for r in rows}
+    got = {(r["series_key"], r["idx"]): r["is_anomaly"]
+           for r in score_drift(series, granularity="hourly").collect()}
+    assert got == want and len(got) == 400
+    assert any(want.values())
 
 
 def _mk_series(spark, groups: dict[tuple, list[float]]):
@@ -140,47 +210,41 @@ def _mk_series(spark, groups: dict[tuple, list[float]]):
         pd.DataFrame(rows, columns=["partition_key", "metric", "idx", "value"]))
 
 
-def test_arrow_engine_groups_on_pair_not_joined_string(spark):
+def test_score_drift_groups_on_pair_not_joined_string(spark):
     """Distinct (partition_key, metric) pairs whose '/'-joined strings collide
-    (partition values may contain '/') must be scored as SEPARATE series by
-    both engines — the arrow engine once grouped on the joined string and
-    silently merged them into one interleaved series."""
+    (partition values may contain '/') must be scored as SEPARATE series —
+    grouping on the joined string would merge them into one interleaved
+    series.  Each pair's rows equal its own driver replay."""
     spiky = [20.0] * 30
     spiky[10] = 300.0
     flat = [1000.0] * 30
-    # both pairs join to the same public series_key "v/turn/rate"
+    # both pairs join to the same public series_key "v/turn/rate"; one
+    # partition puts them in the same Arrow batches
     series = _mk_series(spark, {("v/turn", "rate"): spiky,
-                                ("v", "turn/rate"): flat})
-    a = sorted(score_drift(series, granularity="hourly", engine="arrow").collect(),
-               key=lambda r: (r["idx"], r["value"]))
-    b = sorted(score_drift(series, granularity="hourly", engine="pandas").collect(),
-               key=lambda r: (r["idx"], r["value"]))
-    assert len(a) == len(b) == 60
-    for ra, rb in zip(a, b):
-        assert ra["series_key"] == rb["series_key"] == "v/turn/rate"
-        assert ra["value"] == rb["value"]
-        assert ra["is_anomaly"] == rb["is_anomaly"], (ra["idx"], ra["value"])
+                                ("v", "turn/rate"): flat}).repartition(1)
+    want = _replay(series.collect())
+    got = score_drift(series, granularity="hourly", assume_partitioned=True).collect()
+    assert len(got) == 60
+    for pair, inputs in ((("v/turn", "rate"), set(spiky)), (("v", "turn/rate"), set(flat))):
+        mine = sorted(tuple(r) for r in got if r["value"] in inputs)
+        _assert_rows_equal(mine, want[pair])
     # scored independently: the flat series is quiet, the spike is flagged
-    flat_rows = [r for r in a if r["value"] == 1000.0]
-    assert flat_rows and not any(r["is_anomaly"] for r in flat_rows)
-    assert any(r["is_anomaly"] and r["value"] == 300.0 for r in a)
+    assert not any(r["is_anomaly"] for r in got if r["value"] == 1000.0)
+    assert any(r["is_anomaly"] and r["value"] == 300.0 for r in got)
 
 
 def test_float32_transport_clamps_beyond_f32_range(spark):
     """|value| > f32-max clamps to a huge finite float instead of
     overflowing to Infinity (which would poison the kernel statistics);
-    anomaly flags match the exact float64 transport."""
+    anomaly flags equal detect_series on the exact float64 values."""
     vals = [10.0] * 30
     vals[15] = 1e39  # overflows a float32
     series = _mk_series(spark, {("p", "m"): vals})
-    f32 = sorted(score_drift(series, granularity="hourly",
-                             transport_dtype="float32").collect(),
-                 key=lambda r: r["idx"])
-    f64 = sorted(score_drift(series, granularity="hourly",
-                             transport_dtype="float64").collect(),
-                 key=lambda r: r["idx"])
-    assert len(f32) == len(f64) == 30
-    for r in f32:
+    got = sorted(score_drift(series, granularity="hourly").collect(), key=lambda r: r["idx"])
+    exact = _replay(series.collect(), quantize=False)[("p", "m")]
+    assert len(got) == len(exact) == 30
+    for r in got:
         assert not np.isinf(r["value"]) and not np.isnan(r["value"])
-    assert [r["is_anomaly"] for r in f32] == [r["is_anomaly"] for r in f64]
-    assert f32[15]["is_anomaly"]
+    assert got[15]["value"] == F32_MAX
+    assert [r["is_anomaly"] for r in got] == [r[4] for r in exact]
+    assert got[15]["is_anomaly"]

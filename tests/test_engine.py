@@ -11,10 +11,15 @@ from anomaly_detector_spark.engine.runner import run_validation
 
 
 @pytest.fixture(scope="module")
-def validation(spark):
+def inputs(spark):
     transcripts = synth_transcripts(spark, n_convs=150, seed=42).cache()
     registry = synth_registry(spark, n_convs=150, seed=42).cache()
-    return run_validation(spark, transcripts, registry, cache_input=True)
+    return transcripts, registry
+
+
+@pytest.fixture(scope="module")
+def validation(spark, inputs):
+    return run_validation(spark, *inputs, cache_input=True)
 
 
 def test_verdicts_cover_all_checks(validation):
@@ -53,6 +58,25 @@ def test_checkpoint_resume(spark, validation, tmp_path):
     assert pending.count() < parts_for_check.count() or parts_for_check.count() == 0
     store.record_metrics("run1", {"wall_s": 1.0})
     assert spark.read.parquet(os.path.join(str(tmp_path), "_metrics")).count() == 1
+
+
+def test_resume_scores_only_pending_drift_partitions(spark, inputs, validation):
+    """A resumed run skips the drift series recorded complete and emits an
+    sr_drift verdict for exactly the others, each equal to the full run's
+    (the anti-joined series take score_drift's repartition path)."""
+    full = {r["partition_key"]: r for r in validation.verdicts.collect()
+            if r["check"] == "sr_drift"}
+    keys = sorted(full)
+    done, pending = keys[::2], keys[1::2]
+    assert done and pending
+    completed = spark.createDataFrame([(k,) for k in done], "partition_key string")
+    resumed = run_validation(spark, *inputs, completed_drift_partitions=completed,
+                             persist_intermediates=False)
+    got = {r["partition_key"]: r for r in resumed.verdicts.collect()
+           if r["check"] == "sr_drift"}
+    assert sorted(got) == pending
+    for k in pending:
+        assert got[k] == full[k], k
 
 
 def test_streaming_drift_scores(spark, tmp_path):

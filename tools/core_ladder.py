@@ -160,7 +160,7 @@ def main() -> None:
             pass
 
     # LADDER_PILOT_PRE_TPS: a pilot reading the LAUNCHER took immediately
-    # before exec'ing this process (r6_campaign's gating pilot).  Reusing it
+    # before exec'ing this process (a gating pilot).  Reusing it
     # for the FIRST leg avoids a back-to-back double pilot — each pilot is
     # ~45s of 16-core work that drains the very burst-credit bucket the
     # 32-core leg needs, so the redundant second probe was reading its own

@@ -10,7 +10,7 @@ local[16] and prints one JSON line::
     {"n_turns": N, "walls": [w1, w2], "tps": best_warm_throughput}
 
 Calibration (r4, clean window): ~1.0M tps; PILOT_MIN_TPS=850000 is the
-accept bar used by campaign_when_clean.py and bench.py.
+accept bar used by bench.py.
 
 Run standalone (fresh JVM per probe — never inside a session being
 measured):  python tools/spark_pilot.py
