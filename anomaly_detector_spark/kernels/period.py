@@ -15,10 +15,9 @@
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
+from anomaly_detector_spark.kernels.special import norm_ppf
 from anomaly_detector_spark.kernels.trend import (
     fit_trend,
     median_filter,
@@ -160,7 +159,7 @@ def periodogram(data, min_period: int = 4, max_period: int | None = None):
     """Welch power spectrum mapped to (period, power) pairs, freq-ascending.
 
     Semantics recovered by fitting the reference's golden expected values
-    (tools/periodogram_forensics.py): Hann window (periodic), 50% overlap,
+    (NOTES_ROUND2.md): Hann window (periodic), 50% overlap,
     ``nperseg = min(2 * max_period, len(data) // 2)``, per-segment mean
     detrend, max_period default ``len(data) / 2.5`` — this reproduces the
     reference's implied guess_trended_period values exactly (e.g. 184/360 on
@@ -219,44 +218,6 @@ def periodogram_peaks(data, min_period: int = 4, max_period: int | None = None,
 # --- ACF (statsmodels reconstruction) ---------------------------------------
 
 
-def _norm_ppf(p: float) -> float:
-    """Standard normal inverse CDF (Acklam's rational approximation +
-    one Halley refinement with erfc — double precision)."""
-    if p <= 0.0:
-        return -math.inf
-    if p >= 1.0:
-        return math.inf
-    a = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
-         1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
-    b = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
-         6.680131188771972e01, -1.328068155288572e01]
-    c = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
-         -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
-    d = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
-         3.754408661907416e00]
-    plow, phigh = 0.02425, 1 - 0.02425
-    if p < plow:
-        q = math.sqrt(-2 * math.log(p))
-        x = (((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-        )
-    elif p <= phigh:
-        q = p - 0.5
-        r = q * q
-        x = (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * q / (
-            ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1
-        )
-    else:
-        q = math.sqrt(-2 * math.log1p(-p))
-        x = -(((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-        )
-    # Halley refinement
-    e = 0.5 * math.erfc(-x / math.sqrt(2)) - p
-    u = e * math.sqrt(2 * math.pi) * math.exp(x * x / 2)
-    return x - u / (1 + x * u / 2)
-
-
 def acf(x, nlags: int, alpha: float = 0.1):
     """ACF with Bartlett confidence intervals; statsmodels sm.tsa.acf
     (fft=False, bartlett_confint=True) semantics."""
@@ -277,7 +238,7 @@ def acf(x, nlags: int, alpha: float = 0.1):
     varacf[0] = 0.0
     if nlags >= 2:
         varacf[2:] = (1 + 2 * np.cumsum(r[1:-1] ** 2)) / n
-    z = _norm_ppf(1 - alpha / 2.0)
+    z = norm_ppf(1 - alpha / 2.0)
     interval = z * np.sqrt(varacf)
     confint = np.column_stack([r - interval, r + interval])
     return r, confint

@@ -5,7 +5,8 @@ generalized-ESD critical values (_anomaly_kernel_cython.pyx:56-62) and for
 ``Gaussian.ppf(0.75)`` (the MAD consistency constant, .pyx:7).  Neither scipy
 nor statsmodels is available here, so the incomplete beta function and its
 inverse are implemented from the standard continued-fraction expansion
-(Lentz's algorithm) — public textbook numerics, double precision.
+(Lentz's algorithm), and the normal inverse CDF from Acklam's rational
+approximation — public textbook numerics, double precision.
 """
 
 from __future__ import annotations
@@ -107,11 +108,42 @@ def betaincinv(a: float, b: float, p: float) -> float:
     return x
 
 
-def _norm_ppf(p: float) -> float:
-    """Standard normal inverse CDF (Acklam + one Halley refinement)."""
-    from anomaly_detector_spark.kernels.period import _norm_ppf as impl
-
-    return impl(p)
+def norm_ppf(p: float) -> float:
+    """Standard normal inverse CDF (Acklam's rational approximation +
+    one Halley refinement with erfc — double precision)."""
+    if p <= 0.0:
+        return -math.inf
+    if p >= 1.0:
+        return math.inf
+    a = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
+         1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
+    b = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
+         6.680131188771972e01, -1.328068155288572e01]
+    c = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
+         -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
+    d = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
+         3.754408661907416e00]
+    plow, phigh = 0.02425, 1 - 0.02425
+    if p < plow:
+        q = math.sqrt(-2 * math.log(p))
+        x = (((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
+            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
+        )
+    elif p <= phigh:
+        q = p - 0.5
+        r = q * q
+        x = (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * q / (
+            ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1
+        )
+    else:
+        q = math.sqrt(-2 * math.log1p(-p))
+        x = -(((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
+            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
+        )
+    # Halley refinement
+    e = 0.5 * math.erfc(-x / math.sqrt(2)) - p
+    u = e * math.sqrt(2 * math.pi) * math.exp(x * x / 2)
+    return x - u / (1 + x * u / 2)
 
 
 def student_t_cdf(t: float, df: float) -> float:
@@ -136,7 +168,7 @@ def student_t_ppf(p: float, df: float) -> float:
     if p < 0.5:
         sign, p = -1.0, 1.0 - p
     # Hill (1970) expansion around the normal quantile
-    x = _norm_ppf(p)
+    x = norm_ppf(p)
     g1 = (x**3 + x) / 4.0
     g2 = (5 * x**5 + 16 * x**3 + 3 * x) / 96.0
     g3 = (3 * x**7 + 19 * x**5 + 17 * x**3 - 15 * x) / 384.0

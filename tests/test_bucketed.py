@@ -77,7 +77,8 @@ def test_bucketed_sorted_window_reads_sequentially(spark, bucketed_transcripts):
 def test_bucketed_fused_constraint_sweep_no_exchange(spark, bucketed_transcripts):
     """The full fused constraint pass (monotonic + gaps + uniqueness from one
     window) plans with ZERO exchanges over a conv_id-bucketed table — the
-    clustered-input deployment shape used by the SCALING_BUCKETED series."""
+    clustered-input deployment shape (the clustered-input series in
+    NOTES_ROUND4.md, BENCH/scaling_bucketed.json)."""
     from anomaly_detector_spark.operators import constraints
 
     seq = constraints.sequence_violations(bucketed_transcripts, include_duplicates=True)

@@ -156,7 +156,8 @@ def _planted_series(spark, spikes: dict, n_hours: int = 200):
 def test_score_drift_matches_driver_replay(spark):
     """Every score_drift row equals the driver replay of detect_series, on a
     battery with spiky, flat, too-short and too-long series; exactly the
-    series inside the 12..8640-point bounds are scored."""
+    series inside the 12..8640-point bounds are scored.  The bounds are
+    inclusive and count points after NaN is dropped."""
     # sec_avg values (e.g. 9.5 / 7) are not float32-exact, so the replay
     # only matches if the transport quantizes exactly as it claims
     metrics = {"event_rate": F.count(F.lit(1)).cast("double"), "value_avg": F.avg("value"),
@@ -165,13 +166,28 @@ def test_score_drift_matches_driver_replay(spark):
     short = _mk_events(spark, {"rare": []}, n_hours=MIN_SERIES_POINTS - 1)
     series = derive_series(ev.unionByName(short), partition_cols=["event_type"], ts_col="ts",
                            bucket="1 hour", value_exprs=metrics)
-    too_long = spark.range(MAX_SERIES_POINTS + 1).select(
-        F.lit("long").alias("partition_key"), F.lit("event_rate").alias("metric"),
-        F.col("id").cast("int").alias("idx"), F.lit(1.0).alias("value"))
-    series = series.select("partition_key", "metric", "idx", "value").unionByName(too_long)
+
+    def sawtooth(name, n):
+        return spark.range(n).select(
+            F.lit(name).alias("partition_key"), F.lit("event_rate").alias("metric"),
+            F.col("id").cast("int").alias("idx"),
+            (F.col("id") % 24 + 10.0).cast("double").alias("value"))
+
+    edge = [10.0 + i % 5 for i in range(MIN_SERIES_POINTS + 1)]
+    with_nan = edge[:5] + [float("nan")] + edge[6:]
+    gated = _mk_series(spark, {("exact_min", "event_rate"): edge[:MIN_SERIES_POINTS],
+                               ("min_after_nan", "event_rate"): with_nan,
+                               ("under_min_after_nan", "event_rate"): with_nan[1:]})
+    series = (series.select("partition_key", "metric", "idx", "value")
+              .unionByName(sawtooth("exact_max", MAX_SERIES_POINTS))
+              .unionByName(sawtooth("long", MAX_SERIES_POINTS + 1))
+              .unionByName(gated))
     want = _replay(series.collect())
-    assert sorted(want) == sorted((t, m) for t in ("click", "view", "purchase")
-                                  for m in metrics)
+    assert sorted(want) == sorted(
+        [(t, m) for t in ("click", "view", "purchase") for m in metrics]
+        + [(t, "event_rate") for t in ("exact_min", "exact_max", "min_after_nan")])
+    assert [len(want[(t, "event_rate")]) for t in ("exact_min", "exact_max", "min_after_nan")] \
+        == [MIN_SERIES_POINTS, MAX_SERIES_POINTS, MIN_SERIES_POINTS]
     got = sorted(tuple(r) for r in score_drift(series, granularity="hourly").collect())
     _assert_rows_equal(got, sorted(row for rows in want.values() for row in rows))
 

@@ -8,6 +8,10 @@ import pytest
 from anomaly_detector_spark.data import synth_registry, synth_transcripts
 from anomaly_detector_spark.engine.checkpoint import CheckpointStore
 from anomaly_detector_spark.engine.runner import run_validation
+from anomaly_detector_spark.schema import REGISTRY_SCHEMA, TRANSCRIPTS_SCHEMA
+
+CONSTRAINT_CHECKS = {"uniqueness", "monotonic_ts", "role_domain", "tool_domain",
+                     "null_text", "referential", "turn_gaps"}
 
 
 @pytest.fixture(scope="module")
@@ -24,8 +28,7 @@ def validation(spark, inputs):
 
 def test_verdicts_cover_all_checks(validation):
     checks = {r["check"] for r in validation.verdicts.collect()}
-    assert {"uniqueness", "monotonic_ts", "role_domain", "tool_domain",
-            "null_text", "referential", "turn_gaps", "sr_drift"} <= checks
+    assert CONSTRAINT_CHECKS | {"sr_drift"} <= checks
 
 
 def test_violations_ordered_and_typed(validation):
@@ -77,6 +80,38 @@ def test_resume_scores_only_pending_drift_partitions(spark, inputs, validation):
     assert sorted(got) == pending
     for k in pending:
         assert got[k] == full[k], k
+
+
+@pytest.mark.parametrize("case", ["empty_tables", "all_null_text"])
+def test_run_validation_adversarial_inputs(spark, inputs, validation, case):
+    """Degenerate inputs complete with pinned outcomes.  Empty transcripts
+    and registry: every constraint passes with score 0 and no drift series
+    exists.  All-null text: every turn is a null_text violation, the
+    */text_len series have no points left and yield no verdict, and every
+    other drift verdict equals the full run's."""
+    if case == "empty_tables":
+        transcripts = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
+        registry = spark.createDataFrame([], REGISTRY_SCHEMA)
+    else:
+        transcripts, registry = inputs
+        transcripts = transcripts.withColumn("text", F.lit(None).cast("string"))
+    result = run_validation(spark, transcripts, registry, persist_intermediates=False)
+    verdicts = result.verdicts.collect()
+    constraint = {r["check"]: r for r in verdicts if r["check"] != "sr_drift"}
+    drift = {r["partition_key"]: r for r in verdicts if r["check"] == "sr_drift"}
+    assert set(constraint) == CONSTRAINT_CHECKS
+    assert all(r["partition_key"] == "_global" for r in constraint.values())
+    if case == "empty_tables":
+        assert all(r["passed"] and r["score"] == 0.0 for r in constraint.values())
+        assert drift == {}
+        assert result.violations.count() == 0
+        return
+    assert constraint["null_text"]["score"] == transcripts.count()
+    full = {r["partition_key"]: r for r in validation.verdicts.collect()
+            if r["check"] == "sr_drift"}
+    text_len = [k for k in full if k.endswith("/text_len")]
+    assert text_len and not any(k.endswith("/text_len") for k in drift)
+    assert drift == {k: v for k, v in full.items() if k not in text_len}
 
 
 def test_streaming_drift_scores(spark, tmp_path):

@@ -23,11 +23,10 @@ else:
     CASES = []
 
 # Known reconstruction gaps (100/108 exact).  Round-2 forensics
-# (tools/periodogram_forensics.py) recovered the `seasonal` package's Welch
+# (NOTES_ROUND2.md) recovered the `seasonal` package's Welch
 # periodogram semantics (nperseg = min(2*max_period, n//2), periodic Hann,
 # per-segment demean), which fixed case18/19 and the two yahoo cases.
-# Round-3 forensics (tools/xfail_inverse.py, tools/delta_sweep.py,
-# NOTES_ROUND3.md) went further: for the last-mode family the expected
+# Round-3 forensics (NOTES_ROUND3.md) went further: for the last-mode family the expected
 # values are EXHAUSTIVELY unreachable — all 2^n de-anomalization subsets x
 # all feasible trend windows, the delta-merge compositions, and the
 # seasonal/STL path were enumerated with zero matches at 1e-9.  The
